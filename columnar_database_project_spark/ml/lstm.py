@@ -9,8 +9,21 @@ multi-hot labels + BCE-with-logits, Adam lr 1e-3, batch 32, 10 epochs.
 
 PyTorch is not available in this container, so forward + BPTT + Adam
 are implemented directly in numpy. The model is tiny (vocab ≈ number
-of distinct blocks, ~10³) and lives on the Spark DRIVER — inference is
-a few matmuls per prediction; nothing here touches the data plane.
+of distinct blocks, ~10³) and lives on the Spark DRIVER; nothing here
+touches the data plane.
+
+Inference cost: one prediction scores up to 64 history ids
+(``scheduler.MAX_SEQ``), and the recurrence is sequential, so it runs up
+to 64 steps. The input projection ``E[tok] @ Wx + b`` is computed once
+per distinct id and gathered into step order before the loop; each step
+is then one 64×256 matvec ``h @ Wh`` plus the gate elementwise ops (one
+sigmoid over the packed gates, two tanh, four products and sums), and
+the output layer is one 64×V matvec at the end.
+
+The model is trained on 5-block windows (``training_set.WINDOW``) but
+scored over up to 64 ids. That is reference parity (reference
+prefetch_scheduler.py:171); whether the longer scoring window helps or
+hurts prediction quality is an open question.
 """
 
 from __future__ import annotations
@@ -24,7 +37,7 @@ PAD = 0  # token 0 reserved for padding/unknown (reference training_set_generato
 
 
 def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
+    return 1.0 / (1.0 + np.exp(-np.minimum(np.maximum(x, -60), 60)))
 
 
 class LSTMPrefetcher:
@@ -75,31 +88,49 @@ class LSTMPrefetcher:
     def forward(
         self, seqs: list[list[int]], cache: bool = False
     ) -> np.ndarray | tuple[np.ndarray, dict]:
-        """Logits (B, V) from the last valid hidden state per sequence."""
+        """Logits (B, V) from the last valid hidden state per sequence.
+
+        The input projection ``E[tok] @ Wx + b`` is computed once per
+        distinct token of the batch and gathered into time-major order
+        before the loop, so each step is one ``h @ Wh`` plus the gate
+        elementwise ops. Sequences shorter than the batch width carry
+        their state through the padded steps unchanged; a batch where
+        every sequence has the full width needs no mask.
+        """
         x, lengths = self._pad_batch(seqs)
         p = self.params
         B, T = x.shape
         H = self.hidden_dim
+        toks, inv = np.unique(x, return_inverse=True)
+        proj = p["E"][toks] @ p["Wx"] + p["b"]         # (distinct tokens, 4H)
+        xw = proj[inv.reshape(B, T).T]                 # (T, B, 4H)
+        Wh = p["Wh"]
+        ragged = bool((lengths < T).any())
+        valid = np.arange(T) < lengths[:, None]        # (B, T)
         h = np.zeros((B, H))
         c = np.zeros((B, H))
         steps = []
         for t in range(T):
-            emb = p["E"][x[:, t]]                      # (B, D)
-            mask = (t < lengths).astype(float)[:, None]  # (B, 1)
-            z = emb @ p["Wx"] + h @ p["Wh"] + p["b"]
-            i_g = _sigmoid(z[:, :H])
-            f_g = _sigmoid(z[:, H : 2 * H])
+            z = xw[t] + h @ Wh
+            gates = _sigmoid(z)
+            i_g = gates[:, :H]
+            f_g = gates[:, H : 2 * H]
+            o_g = gates[:, 3 * H :]
             g_g = np.tanh(z[:, 2 * H : 3 * H])
-            o_g = _sigmoid(z[:, 3 * H :])
             c_new = f_g * c + i_g * g_g
             h_new = o_g * np.tanh(c_new)
-            c_next = mask * c_new + (1 - mask) * c
-            h_next = mask * h_new + (1 - mask) * h
+            if ragged:
+                m = valid[:, t : t + 1]
+                h_next = np.where(m, h_new, h)
+                c_next = np.where(m, c_new, c)
+            else:
+                h_next, c_next = h_new, c_new
             if cache:
                 steps.append(
                     dict(
-                        emb=emb, h_prev=h, c_prev=c, i=i_g, f=f_g, g=g_g, o=o_g,
-                        c_new=c_new, mask=mask, tok=x[:, t],
+                        emb=p["E"][x[:, t]], h_prev=h, c_prev=c,
+                        i=i_g, f=f_g, g=g_g, o=o_g, c_new=c_new,
+                        mask=valid[:, t : t + 1].astype(float), tok=x[:, t],
                     )
                 )
             h, c = h_next, c_next

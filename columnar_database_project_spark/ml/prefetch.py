@@ -234,7 +234,7 @@ class PrefetchService:
         if self.concurrent_issue > 1 and len(suggestions) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
-            t0 = time.time()
+            t0 = time.perf_counter()
             with ThreadPoolExecutor(
                 max_workers=min(self.concurrent_issue, len(suggestions))
             ) as pool:
@@ -244,7 +244,7 @@ class PrefetchService:
                         suggestions,
                     )
                 )
-            wall = time.time() - t0
+            wall = time.perf_counter() - t0
             loaded = [b for (b, _p), ok in zip(suggestions, oks) if ok]
             self.prefetch_read_sec += wall
             per = wall / max(1, len(loaded))
@@ -252,9 +252,9 @@ class PrefetchService:
                 self.economics.note_prefetch(b, per)
         else:
             for b, _p in suggestions:
-                t0 = time.time()
+                t0 = time.perf_counter()
                 if self.prefetcher.prefetch_block(b):
-                    dt = time.time() - t0
+                    dt = time.perf_counter() - t0
                     self.economics.note_prefetch(b, dt)
                     self.prefetch_read_sec += dt
                     loaded.append(b)

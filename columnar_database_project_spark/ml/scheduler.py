@@ -13,7 +13,7 @@ from collections import defaultdict, deque
 
 import numpy as np
 
-from columnar_database_project_spark.ml.lstm import PAD, LSTMPrefetcher
+from columnar_database_project_spark.ml.lstm import PAD, LSTMPrefetcher, _sigmoid
 from columnar_database_project_spark.ml.training_set import TrainingSet
 
 MAX_SEQ = 64        # reference prefetch_scheduler.py:171
@@ -63,7 +63,7 @@ class PrefetchScheduler:
             return None
         logits = self.model.forward([enc])[0]
         logits[PAD] = -1e9
-        probs = 1.0 / (1.0 + np.exp(-np.clip(logits, -60, 60)))
+        probs = _sigmoid(logits)
         exclude = exclude_blocks or set()
         order = np.argsort(-probs)
         out: list[tuple[int, float]] = []

@@ -90,6 +90,128 @@ class TestLSTM:
         np.testing.assert_allclose(m.forward(seqs), m2.forward(seqs))
 
 
+class _ReferenceLSTM(LSTMPrefetcher):
+    """The per-step forward loop the hoisted kernel replaced: re-gathers
+    the embedding and projects it every step, three separate gate
+    sigmoids, and a float-mask blend of h/c for every batch. Kept as
+    the reference the kernel is checked against; ``train_step`` runs
+    its BPTT over this loop's cache."""
+
+    def forward(self, seqs, cache=False):
+        x, lengths = self._pad_batch(seqs)
+        p = self.params
+        B, T = x.shape
+        H = self.hidden_dim
+        h = np.zeros((B, H))
+        c = np.zeros((B, H))
+        steps = []
+        for t in range(T):
+            emb = p["E"][x[:, t]]
+            mask = (t < lengths).astype(float)[:, None]
+            z = emb @ p["Wx"] + h @ p["Wh"] + p["b"]
+            i_g = _sigmoid(z[:, :H])
+            f_g = _sigmoid(z[:, H : 2 * H])
+            g_g = np.tanh(z[:, 2 * H : 3 * H])
+            o_g = _sigmoid(z[:, 3 * H :])
+            c_new = f_g * c + i_g * g_g
+            h_new = o_g * np.tanh(c_new)
+            c_next = mask * c_new + (1 - mask) * c
+            h_next = mask * h_new + (1 - mask) * h
+            if cache:
+                steps.append(
+                    dict(
+                        emb=emb, h_prev=h, c_prev=c, i=i_g, f=f_g, g=g_g, o=o_g,
+                        c_new=c_new, mask=mask, tok=x[:, t],
+                    )
+                )
+            h, c = h_next, c_next
+        logits = h @ p["Wy"] + p["by"]
+        if cache:
+            return logits, dict(steps=steps, h_last=h, x=x, lengths=lengths)
+        return logits
+
+
+def _reference_twin(model: LSTMPrefetcher) -> _ReferenceLSTM:
+    ref = _ReferenceLSTM(model.num_tokens, model.embed_dim, model.hidden_dim)
+    ref.params = {k: v.copy() for k, v in model.params.items()}
+    return ref
+
+
+class TestForwardKernel:
+    """The hoisted forward kernel against the per-step reference loop.
+    Summation order differs (the bias is added to the projection before
+    ``h @ Wh``), so results agree to float64 rounding, not bit for bit."""
+
+    @pytest.mark.parametrize(
+        "seqs",
+        [
+            [[3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5]],                  # single sequence
+            [[1, 2, 3, 4], [5, 6, 7, 8], [9, 10, 11, 1]],         # uniform batch
+            [[1], [2, 3, 4, 5, 6, 7], [8, 9], [10, 11, 1, 2]],    # ragged batch
+            [[7]],                                                # T = 1
+            [[4], [4], [11]],                                     # T = 1, batch
+            [[2, 2, 2, 0, 2, 0, 0, 3, 3], [0, 5, 0, 5, 5]],       # repeats + mid PAD
+        ],
+        ids=["single", "uniform", "ragged", "t1", "t1_batch", "repeats_pad"],
+    )
+    def test_logits_match_reference(self, seqs):
+        m = LSTMPrefetcher(num_tokens=12, seed=5)
+        # a trained-looking model: nonzero biases and a nonzero PAD row
+        rng = np.random.RandomState(9)
+        m.params["b"] = rng.normal(0, 0.5, m.params["b"].shape)
+        m.params["by"] = rng.normal(0, 0.5, m.params["by"].shape)
+        m.params["E"][0] = rng.normal(0, 0.5, m.embed_dim)
+        ref = _reference_twin(m)
+        np.testing.assert_allclose(m.forward(seqs), ref.forward(seqs), rtol=0, atol=1e-10)
+
+    def test_train_steps_match_reference_on_ragged_prefixes(self):
+        from columnar_database_project_spark.ml.alt_trainer import (
+            build_prefix_dataset,
+        )
+
+        seq = generate_mixed_logs(400, seed=13)
+        queries = [seq[i : i + 12] for i in range(0, len(seq) - 12, 12)]
+        inputs, labels, id2idx, _ = build_prefix_dataset(queries)
+        m = LSTMPrefetcher(num_tokens=len(id2idx) + 1, seed=2)
+        ref = _reference_twin(m)
+        for step in range(5):
+            batch = list(range(step * 32, step * 32 + 32))
+            seqs = [inputs[i] for i in batch]
+            assert len({len(s) for s in seqs}) > 1          # ragged
+            mh = np.zeros((len(batch), m.num_tokens))
+            mh[np.arange(len(batch)), [labels[i] for i in batch]] = 1.0
+            for mode in ("ce", "bce"):
+                loss = m.train_step(seqs, mh, lr=1e-2, loss_mode=mode)
+                ref_loss = ref.train_step(seqs, mh, lr=1e-2, loss_mode=mode)
+                assert abs(loss - ref_loss) <= 1e-10
+                for k in m.params:
+                    np.testing.assert_allclose(
+                        m.params[k], ref.params[k], rtol=0, atol=1e-10, err_msg=k
+                    )
+
+    def test_scheduler_suggestions_match_reference(self):
+        seq = generate_mixed_logs(1500, seed=3)
+        ts = build_from_sequence(seq)
+        m = LSTMPrefetcher(ts.vocab_size, seed=7)
+        m.fit(ts.inputs, ts.labels, epochs=4)
+        sched = PrefetchScheduler(m, ts.id2idx, ts.idx2id)
+        ref = PrefetchScheduler(_reference_twin(m), ts.id2idx, ts.idx2id)
+        replay = generate_mixed_logs(3000, seed=17)
+        rng = np.random.RandomState(17)
+        for _ in range(1000):
+            end = int(rng.randint(3, len(replay)))
+            window = replay[max(0, end - int(rng.randint(3, 80))) : end]
+            cached = set(window[-32:])
+            got = sched.suggest_topk_prefetch(sequence=window, k=10, exclude_blocks=cached)
+            want = ref.suggest_topk_prefetch(sequence=window, k=10, exclude_blocks=cached)
+            assert (got is None) == (want is None)
+            if got is not None:
+                assert [b for b, _ in got] == [b for b, _ in want]
+                np.testing.assert_allclose(
+                    [p for _, p in got], [p for _, p in want], rtol=0, atol=1e-12
+                )
+
+
 class TestScheduler:
     def _trained(self):
         seq = generate_mixed_logs(1500, seed=3)

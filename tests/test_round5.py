@@ -325,6 +325,9 @@ class TestScaleAwareTuning:
         is reserved for inputs that actually fill the cluster."""
         from columnar_database_project_spark import session as sess
 
+        # the documented cases are for the 32-core box; pin the core
+        # count so they hold on any machine
+        monkeypatch.setattr(sess, "DEFAULT_CPUS", 32)
         monkeypatch.setattr(sess, "input_bytes", lambda d: 400 * 1024**2)
         conf = sess.tune_for_scale(spark, str(tmp_path))
         assert conf["spark.sql.files.maxPartitionBytes"] == str(16 * 1024**2)
@@ -332,8 +335,17 @@ class TestScaleAwareTuning:
         monkeypatch.setattr(sess, "input_bytes", lambda d: 6 * 1024**3)
         conf = sess.tune_for_scale(spark, str(tmp_path))
         split = int(conf["spark.sql.files.maxPartitionBytes"])
-        assert split == (6 * 1024**3) // (3 * sess.DEFAULT_CPUS)
+        assert split == (6 * 1024**3) // (3 * 32)
         assert 16 * 1024**2 < split < 128 * 1024**2
+        # on 4 cores, split = min(128 MiB, max(16 MiB, b // (3 * 4))):
+        # 400 MiB lands above the floor, 6 GiB at the cap
+        monkeypatch.setattr(sess, "DEFAULT_CPUS", 4)
+        monkeypatch.setattr(sess, "input_bytes", lambda d: 400 * 1024**2)
+        conf = sess.tune_for_scale(spark, str(tmp_path))
+        assert conf["spark.sql.files.maxPartitionBytes"] == str((400 * 1024**2) // 12)
+        monkeypatch.setattr(sess, "input_bytes", lambda d: 6 * 1024**3)
+        conf = sess.tune_for_scale(spark, str(tmp_path))
+        assert conf["spark.sql.files.maxPartitionBytes"] == str(128 * 1024**2)
         monkeypatch.undo()
         sess.tune_for_scale(spark, "/root/testdata/sf0.001")
 
