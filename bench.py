@@ -1226,9 +1226,9 @@ def bench_prefetch_ab(
     eval_seq = generate_mixed_logs(250, ranges=ranges, seed=1042)
     ts = build_from_sequence(train_seq)
     model = LSTMPrefetcher(ts.vocab_size, seed=7)
-    t0 = time.time()
+    t0 = time.perf_counter()
     model.fit(ts.inputs, ts.labels, epochs=8)
-    train_sec = round(time.time() - t0, 3)
+    train_sec = round(time.perf_counter() - t0, 3)
     scheduler = PrefetchScheduler(model, ts.id2idx, ts.idx2id)
 
     CAPACITY = 32          # < hot-set size (~90 blocks): LRU must choose
@@ -1241,9 +1241,9 @@ def bench_prefetch_ab(
     }
 
     def read_latency(block_id: int) -> float:
-        t = time.time()
+        t = time.perf_counter()
         spark.read.parquet(index.block_file(block_id)).count()
-        return time.time() - t
+        return time.perf_counter() - t
 
     # Untimed global warm pass over every block FIRST: the initial
     # replay otherwise pays per-file reader/codegen/page-cache warmup
@@ -1340,7 +1340,7 @@ def bench_prefetch_ab(
         issued_bytes = 0
         hit_bytes = 0
         for i, b in enumerate(eval_seq):
-            t0 = time.time()
+            t0 = time.perf_counter()
             df = cache.get(b)
             hit = df is not None
             if df is None:
@@ -1354,16 +1354,16 @@ def bench_prefetch_ab(
                     prefetch_hits += 1
                     pending.discard(b)
                     hit_bytes += os.path.getsize(index.block_file(b))
-            dt = time.time() - t0
+            dt = time.perf_counter() - t0
             lat.append(dt)
             (hit_lat if hit else miss_lat).append(dt)
             if service is not None:
                 service.note_access(b, hit, dt)  # feeds the economics
             history.record(b)
             if service is not None and (i + 1) % PREFETCH_EVERY == 0:
-                t0 = time.time()
+                t0 = time.perf_counter()
                 service.run_once()     # background-pool work in prod
-                prefetch_sec += time.time() - t0
+                prefetch_sec += time.perf_counter() - t0
                 fresh = service.issued_log[issued_seen:]
                 pending.update(fresh)
                 issued_bytes += sum(
@@ -1417,9 +1417,9 @@ def bench_prefetch_ab(
         return entry, econ
 
     def timed_replay(leg: str, *args, **kwargs):
-        t0 = time.time()
+        t0 = time.perf_counter()
         res = replay(*args, **kwargs)
-        leg_sec[leg] = round(time.time() - t0, 1)
+        leg_sec[leg] = round(time.perf_counter() - t0, 1)
         return res
 
     # 1. the base config — the section's minimal useful product (every
@@ -1487,9 +1487,9 @@ def bench_prefetch_ab(
     # 4. no_cache: raw per-access read cost — narrative context only,
     # no compact-line claim reads it.
     if _fits(1.2 * L):
-        t0 = time.time()
+        t0 = time.perf_counter()
         lat = [read_latency(b) for b in eval_seq]
-        leg_sec["no_cache"] = round(time.time() - t0, 1)
+        leg_sec["no_cache"] = round(time.perf_counter() - t0, 1)
         out["no_cache"] = {
             "hit_rate": 0.0,
             "mean_access_ms": round(1000 * sum(lat) / len(lat), 2),

@@ -12,18 +12,27 @@ are implemented directly in numpy. The model is tiny (vocab ≈ number
 of distinct blocks, ~10³) and lives on the Spark DRIVER; nothing here
 touches the data plane.
 
-Inference cost: one prediction scores up to 64 history ids
-(``scheduler.MAX_SEQ``), and the recurrence is sequential, so it runs up
-to 64 steps. The input projection ``E[tok] @ Wx + b`` is computed once
-per distinct id and gathered into step order before the loop; each step
-is then one 64×256 matvec ``h @ Wh`` plus the gate elementwise ops (one
-sigmoid over the packed gates, two tanh, four products and sums), and
-the output layer is one 64×V matvec at the end.
+Scoring context: ``context`` is the widest padded batch ``train_step``
+has seen, i.e. the longest input the model was trained on: 5 for the
+shipped trainer (``training_set.WINDOW``), at most 20 for
+``alt_trainer``'s prefixes, 0 for an untrained model or a legacy
+``.npz`` saved without it. The scheduler scores the last ``context``
+known ids (all of its ≤64, ``scheduler.MAX_SEQ``, when 0). Scoring 64
+ids, as the reference does (prefetch_scheduler.py:171), feeds the model
+inputs 13× longer than any it was trained on; on a replay of the
+``block_replay`` trajectory (4,000 accesses, ``BlockCache(32)``, a cycle
+every 5 accesses, seeds 1-10 and 101-110) the 5-id window raised the
+cache hit ratio on all 20 seeds (median 0.571 → 0.615) and prefetch
+precision on all 20 (0.208 → 0.233); 8, 16 and 32 ids lost to 5 on 18,
+19 and 20 of them.
 
-The model is trained on 5-block windows (``training_set.WINDOW``) but
-scored over up to 64 ids. That is reference parity (reference
-prefetch_scheduler.py:171); whether the longer scoring window helps or
-hurts prediction quality is an open question.
+Inference cost: the recurrence is sequential, so one prediction runs up
+to ``context`` steps (5 for the shipped trainer). The input projection
+``E[tok] @ Wx + b`` is computed once per distinct id and gathered into
+step order before the loop; each step is then one 64×256 matvec
+``h @ Wh`` plus the gate elementwise ops (one sigmoid over the packed
+gates, two tanh, four products and sums), and the output layer is one
+64×V matvec at the end.
 """
 
 from __future__ import annotations
@@ -69,6 +78,7 @@ class LSTMPrefetcher:
             "by": np.zeros(V),
         }
         self.params["E"][PAD] = 0.0
+        self.context = 0   # widest padded batch train_step has seen
         # Adam state
         self._m = {k: np.zeros_like(v) for k, v in self.params.items()}
         self._v = {k: np.zeros_like(v) for k, v in self.params.items()}
@@ -159,6 +169,7 @@ class LSTMPrefetcher:
         p = self.params
         H = self.hidden_dim
         logits, cache = self.forward(seqs, cache=True)
+        self.context = max(self.context, cache["x"].shape[1])
         B = logits.shape[0]
         eps = 1e-12
         if loss_mode == "ce":
@@ -268,6 +279,7 @@ class LSTMPrefetcher:
             num_tokens=self.num_tokens,
             embed_dim=self.embed_dim,
             hidden_dim=self.hidden_dim,
+            context=self.context,
             **self.params,
         )
 
@@ -283,4 +295,5 @@ class LSTMPrefetcher:
         )
         for k in model.params:
             model.params[k] = data[k]
+        model.context = int(data["context"]) if "context" in data.files else 0
         return model

@@ -86,7 +86,9 @@ class GlobalHistory:
     def get_sequence(self, n: int | None = None) -> list[int]:
         with self._lock:
             seq = list(self._dq)
-        return seq if n is None else seq[-n:]
+        if n is None:
+            return seq
+        return seq[-n:] if n > 0 else []
 
     def __len__(self) -> int:
         with self._lock:

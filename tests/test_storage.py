@@ -122,5 +122,6 @@ class TestGlobalHistory:
         h.record_many([1, 2, 3, 4])
         assert h.get_sequence() == [2, 3, 4]
         assert h.get_sequence(2) == [3, 4]
+        assert h.get_sequence(0) == []       # not seq[-0:], the whole history
         h.record(5)
         assert len(h) == 3
